@@ -83,7 +83,7 @@ def _jvm_source(spark, path: str, schema) -> DataFrame:
     """JVM-only staged request source: ``spark.read.text`` over a
     FIXED-SIZE padded file (the scan's FileIndex caches the length at
     compile time, so the file must never change size — the writer pads
-    with newlines), one base64-cell CSV-ish line per request row, decoded
+    with one filler line), one base64-cell CSV-ish line per request row, decoded
     and cast entirely with Catalyst expressions. This keeps the serving
     hot path free of Python workers: a 1-row ``mapInArrow`` roundtrip
     costs ~200 ms/execution on this host regardless of data — the
@@ -106,14 +106,16 @@ def _jvm_source(spark, path: str, schema) -> DataFrame:
             decoded = F.decode(decoded, "UTF-8").cast(f.dataType)
         col = F.when(cell == "~", F.lit(None).cast(f.dataType)).otherwise(decoded)
         cols.append(col.alias(f.name))
-    # every encoded line ends with a trailing "," so no real row is ever
-    # the empty string; empty lines are exactly the padding
-    return raw.where(F.length("value") > 0).select(*cols)
+    # every encoded line ends with a trailing ","; the filler line never
+    # does
+    return raw.where(F.col("value").endswith(",")).select(*cols)
 
 
 def _encode_staged_lines(table, pad_bytes: int, schema=None) -> bytes:
     """Encode an Arrow table of request rows into the fixed-size staged
-    text payload (base64 cells, "~" nulls, trailing comma, newline pad).
+    text payload (base64 cells, "~" nulls, trailing comma), padded by ONE
+    filler line of ``#`` — a newline pad would make every serve's scan
+    read and filter one empty row per padding byte.
     ``timestamp``-typed fields encode as epoch-MICROS (decoded by
     ``timestamp_micros`` — timezone-free on the wire). Both staging
     producers (``toArrow`` and ``LocalDataToArrowConversion``) emit
@@ -176,7 +178,16 @@ def _encode_staged_lines(table, pad_bytes: int, schema=None) -> bytes:
             "higher BEFORE the deployment compiles, or serve the batch "
             "through the uncompiled DataFrame path."
         )
-    return data + b"\n" * (pad_bytes - len(data))
+    return data + b"#" * (pad_bytes - len(data))
+
+
+def _replace_file(path: str, data: bytes) -> None:
+    """Swap ``path``'s contents atomically (a scan never reads a torn
+    file)."""
+    tmp = path + ".tmp"
+    with open(tmp, "wb") as f:
+        f.write(data)
+    os.replace(tmp, path)
 
 
 def _exact_collect_plan(df: DataFrame, schema):
@@ -317,9 +328,21 @@ class CompiledRequestPlan:
       the PREVIOUS request's rows. Fresh physical planning per call is the
       correct/fast split: analysis of an already-resolved tree is cheap;
       the Python-side lowering never re-runs.
+    - the plan's history is the request table's store snapshot taken at
+      compile time UNION a plan-private append tail: a second fixed-size
+      staged text file (JVM mode only), unioned in before TTL so every
+      TTL filter sees its rows. An INSERT into the request table bumps
+      its epoch; the next serve rewrites the tail with every row the
+      engine's insert log holds since the compile (:meth:`catch_up`) and
+      serves on the same plan — the analog of the reference's ``Put``
+      into live segments.
     - ``key`` (from ``SqlDeployment._serving_key``) pins the engine state
-      the plan captured: any DML epoch bump / TTL pin / mode change makes
-      ``run_request`` drop and recompile.
+      the plan serves. Any other change — DELETE/LOAD/replace of the
+      request table, a write to another table the query reads, a TTL
+      pin / mode / db change, a tail past the staging size, a trimmed
+      insert log, or any INSERT at all when the plan has no tail (nested
+      request schemas, or a store schema that no longer matches the
+      deployment's) — makes ``run_request`` drop and recompile.
 
     Both serve arms are EAGER and hold the per-plan lock across
     stage+collect, so concurrent callers (the ThreadingHTTPServer RESTful
@@ -358,33 +381,51 @@ class CompiledRequestPlan:
             self._staged = os.path.join(self._dir, "requests.arrow")
         # stage an empty batch so compile-time analysis sees the schema
         # (and, in JVM mode, the FIXED file size the scan will cache)
-        self._write_staged(
-            self.spark.createDataFrame([], dep.input_schema).toArrow()
-        )
+        empty = self.spark.createDataFrame([], dep.input_schema).toArrow()
+        self._write_staged(empty)
         from openmldb_spark.engine import servingmat
 
+        #: the key at compile time: the store snapshot the plan reads;
+        #: the tail holds every request-table INSERT since
+        self._base_key = key
+        tail = self._tail_path = None
         if self._jvm_mode:
             src = _jvm_source(self.spark, self._staged, dep.input_schema)
         else:
             src = self.spark.range(0, 1, numPartitions=1).mapInArrow(
                 _staged_reader(self._staged), dep.input_schema
             )
+        store = dep.engine.tables[dep.request_table].schema
+        if self._jvm_mode and [(f.name, f.dataType) for f in store] == [
+            (f.name, f.dataType) for f in dep.input_schema
+        ]:
+            self._tail_path = os.path.join(self._dir, "tail.txt")
+            _replace_file(
+                self._tail_path,
+                _encode_staged_lines(empty, self._pad, dep.input_schema),
+            )
+            tail = servingmat.mark_staged(
+                _jvm_source(self.spark, self._tail_path, dep.input_schema)
+            )
         # marker filter (constant-folded away) so servingmat.offer can
-        # refuse subtrees reading the staged source in EITHER mode
+        # refuse subtrees reading the staged source in EITHER mode (and
+        # any subtree reading the tail)
         src = servingmat.mark_staged(src)
-        self._src = src
+        self._src, self._tail = src, tail
         # serving-static materialization: history-only intermediates the
         # lowering offers (LAST JOIN deduped right sides) persist for the
         # plan's lifetime and materialize NOW, so serves read in-memory
         # state instead of re-running their shuffle chains — the analog of
         # the reference tablet's resident segment indexes. Invalidation is
-        # already correct: any DML bumps the serving key, which drops this
-        # plan (and these caches) before the next serve.
+        # already correct: a write to any table the query reads, other
+        # than a tail-served INSERT into the request table (whose rows no
+        # materialized subtree reads), drops this plan before the next
+        # serve.
 
         self._materialized: list = []
         with servingmat.collecting(self._materialized):
             self.plan = dep._run_request_on(
-                dep._query_with_params(None), src, None
+                dep._query_with_params(None), src, None, tail=tail
             )
         for df in self._materialized:
             df.count()
@@ -455,18 +496,44 @@ class CompiledRequestPlan:
         return self.plan.where(F.lit(True))
 
     def _write_staged(self, table) -> None:
-        tmp = self._staged + ".tmp"
         if self._jvm_mode:
-            with open(tmp, "wb") as f:
-                f.write(
-                    _encode_staged_lines(table, self._pad, self.dep.input_schema)
-                )
-        else:
-            import pyarrow as pa
+            _replace_file(
+                self._staged,
+                _encode_staged_lines(table, self._pad, self.dep.input_schema),
+            )
+            return
+        import pyarrow as pa
 
-            with pa.ipc.new_file(tmp, table.schema) as w:
-                w.write_table(table)
+        tmp = self._staged + ".tmp"
+        with pa.ipc.new_file(tmp, table.schema) as w:
+            w.write_table(table)
         os.replace(tmp, self._staged)
+
+    def catch_up(self, key: tuple) -> bool:
+        """Make this plan serve engine state ``key`` without recompiling:
+        True when ``key`` is the plan's own, or when the only writes since
+        the compile are INSERTs into the request table that still fit the
+        tail (the tail file is rewritten with all of them and ``key``
+        adopted). False means the caller must recompile. Runs under the
+        plan lock, so no serve reads a half-advanced plan."""
+        with self._lock:
+            if key == self.key:
+                return True
+            if self._tail_path is None:
+                return False
+            rows = self.dep._inserts_since(self._base_key, key)
+            if rows is None:
+                return False
+            schema = self.dep.input_schema
+            try:
+                data = _encode_staged_lines(
+                    _rows_to_arrow(rows, [], schema), self._pad, schema
+                )
+            except ValueError:  # past the staging size: recompile
+                return False
+            _replace_file(self._tail_path, data)
+            self.key = key
+            return True
 
     def _local_request_table(self, requests: DataFrame):
         """The request batch as an Arrow table WITHOUT a Spark job, when

@@ -241,16 +241,50 @@ class Engine(DdlMixin, DmlMixin, DeployMixin, ShowMixin):
         #: (src/storage/aggregator.cc; pinned by the ported
         #: integration_test/long_window delete cases).
         self._epochs: dict[tuple, int] = {}
+        #: (db, bare) -> (since, [(epoch, rows), ...]): the rows each
+        #: online INSERT appended after epoch ``since``, the table's last
+        #: non-INSERT write (or the last trimmed entry). A compiled
+        #: request plan reads it to serve inserts from its append tail
+        #: instead of recompiling (the reference's Put into live segments)
+        self._insert_log: dict[tuple, tuple[int, list]] = {}
 
-    def _bump_epoch(self, db: str, bare: str) -> None:
+    #: most rows an insert log holds; older entries are trimmed, and a
+    #: plan compiled before a trimmed entry recompiles
+    _INSERT_LOG_ROWS = 10_000
+
+    def _bump_epoch(self, db: str, bare: str, inserted: Optional[list] = None) -> None:
+        """Advance a table's epoch. ``inserted`` is the row list of an
+        online INSERT and is logged under the new epoch; any other write
+        drops the table's log, so later plans cannot read past it."""
         key = (db, bare)
-        self._epochs[key] = self._epochs.get(key, 0) + 1
+        prev = self._epochs.get(key, 0)
+        self._epochs[key] = prev + 1
+        if inserted is None:
+            self._insert_log.pop(key, None)
+            return
+        since, entries = self._insert_log.get(key, (prev, []))
+        entries.append((prev + 1, inserted))
+        held = sum(len(rows) for _, rows in entries)
+        while held > self._INSERT_LOG_ROWS:
+            since, rows = entries.pop(0)
+            held -= len(rows)
+        self._insert_log[key] = (since, entries)
 
     def table_epoch(self, name: str) -> int:
         """Monotonic mutation counter for a table (any name spelling);
         0 until first write. Caches built from the table's rows compare
         this to their build-time value to detect staleness."""
         return self._epochs.get(self._loc(name), 0)
+
+    def inserts_since(self, name: str, epoch: int) -> Optional[list]:
+        """The rows online INSERTs appended to a table after ``epoch``, in
+        insert order — or ``None`` when some other write (DELETE, LOAD,
+        replace, an offline write) or a trimmed log lies in between."""
+        key = self._loc(name)
+        since, entries = self._insert_log.get(key, (self._epochs.get(key, 0), []))
+        if epoch < since:
+            return None
+        return [r for e, rows in entries if e > epoch for r in rows]
 
     @property
     def databases(self) -> set[str]:
@@ -336,24 +370,49 @@ class Engine(DdlMixin, DmlMixin, DeployMixin, ShowMixin):
             self._bump_epoch(db, bare)
 
     def _store_append(
-        self, name: str, new: DataFrame, offline: Optional[bool] = None
+        self, name: str, rows: list, offline: Optional[bool] = None
     ) -> None:
-        """Append rows to a table's store. Offline appends write through
-        the offline-info ledger (into ``parts['base']``) so symbolic paths
-        added by ALTER TABLE are never double-counted and later
-        mode='append' loads keep the inserted rows."""
+        """Append row tuples (already coerced to the store's schema) to a
+        table's store. Offline appends write through the offline-info
+        ledger (into ``parts['base']``) so symbolic paths added by ALTER
+        TABLE are never double-counted and later mode='append' loads keep
+        the inserted rows."""
         if offline is None:
             offline = self._offline_mode
         db, bare = self._loc(name)
-        if offline:
-            parts = self._off_ledger(db, bare)
-            parts["base"] = (
-                new if parts["base"] is None else parts["base"].unionByName(new)
-            )
-            self._off_rebuild(db, bare)
-        else:
-            self._dbs[db][bare] = self._dbs[db][bare].unionByName(new)
-            self._bump_epoch(db, bare)
+        if not offline:
+            self._append_online(db, bare, rows)
+            return
+        parts = self._off_ledger(db, bare)
+        new = self._local_frame(rows, self._store_get(name, True).schema)
+        parts["base"] = (
+            new if parts["base"] is None else parts["base"].unionByName(new)
+        )
+        self._off_rebuild(db, bare)
+
+    def _append_online(self, db: str, bare: str, rows: list) -> None:
+        """Online insert: union the rows into the table and log them under
+        the new epoch (see ``_insert_log``)."""
+        store = self._dbs[db][bare]
+        self._dbs[db][bare] = store.unionByName(self._local_frame(rows, store.schema))
+        self._bump_epoch(db, bare, inserted=rows)
+
+    def _local_frame(self, rows: list, schema) -> DataFrame:
+        """Driver-held rows as a ``LocalRelation`` (through Spark's Arrow
+        encoding): later reads scan one partition per insert rather than
+        a ``defaultParallelism``-wide parallelized RDD. Rows pass the same
+        type verifier ``createDataFrame`` applies to a row list, so a bad
+        value fails with the same error."""
+        from pyspark.sql.conversion import LocalDataToArrowConversion
+        from pyspark.sql.types import _make_type_verifier
+
+        if not rows:  # the conversion asserts a non-empty batch
+            return self.spark.createDataFrame([], schema)
+        verify = _make_type_verifier(schema)
+        for r in rows:
+            verify(r)
+        table = LocalDataToArrowConversion.convert(rows, schema, False)
+        return self.spark.createDataFrame(table, schema=schema)
 
     def _table_view(self) -> dict[str, DataFrame]:
         """Resolution mapping for the Lowerer: current db's tables under

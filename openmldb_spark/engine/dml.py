@@ -78,10 +78,10 @@ class DmlMixin:
                 for r in rows
             ]
         rows = [
-            [_coerce(v, f.dataType) for v, f in zip(r, schema.fields)] for r in rows
+            tuple(_coerce(v, f.dataType) for v, f in zip(r, schema.fields))
+            for r in rows
         ]
-        new = self.spark.createDataFrame(rows, schema)
-        self._store_append(name, new)
+        self._store_append(name, rows)
         return None
 
     def _delete(self, sql_text: str):

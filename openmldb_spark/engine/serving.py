@@ -59,8 +59,10 @@ class SqlDeployment(PreaggServing):
         self._preagg_src: Optional[tuple] = None
         self._preagg_hist: Optional[DataFrame] = None
         #: compiled request plan (the reference compiles once per DEPLOY,
-        #: ``hybridse/src/vm/engine.cc:453-496``; rebuilt here when
-        #: :meth:`_serving_key` changes — DML epochs / TTL pin / mode)
+        #: ``hybridse/src/vm/engine.cc:453-496``; INSERTs into the request
+        #: table reach it through its append tail, and it is rebuilt when
+        #: :meth:`_serving_key` changes any other way — see
+        #: :meth:`_compiled_plan`)
         self._compiled: Optional["CompiledRequestPlan"] = None
         #: escape hatch: False forces the per-call plan-build path
         self.use_compiled = True
@@ -148,9 +150,12 @@ class SqlDeployment(PreaggServing):
         source), and each call only swaps the staged rows — the Spark
         analog of the reference compiling once per DEPLOY and binding rows
         per call (``engine.cc:453-496``, ``sql_cluster_router.h:116-190``
-        CallProcedure). DML on any table the query reads bumps its epoch
-        and the next call recompiles. Explicit-history and parameterized
-        calls build their plan per call, as before.
+        CallProcedure). An INSERT into the request table is served from
+        the plan's append tail without recompiling, like the reference's
+        ``Put`` into live segments; any other write to a table the query
+        reads (DELETE, LOAD, replace, writes to join/union tables) bumps
+        its epoch and the next call recompiles. Explicit-history and
+        parameterized calls build their plan per call, as before.
 
         r13: compiled serves are EAGER — the serve runs (stage + collect)
         under the deployment's plan lock and the returned DataFrame is a
@@ -172,11 +177,7 @@ class SqlDeployment(PreaggServing):
             and parameters is None
             and self.input_schema is not None
         ):
-            key = self._serving_key()
-            if self._compiled is None or self._compiled.key != key:
-                self._release_compiled()
-                self._compiled = CompiledRequestPlan(self, key)
-            return self._compiled.serve(requests)
+            return self._compiled_plan().serve(requests)
         q = self._query_with_params(parameters)
         return self._run_request_on(q, requests, history)
 
@@ -192,14 +193,38 @@ class SqlDeployment(PreaggServing):
         no compiled plan applies (e.g. no input schema)."""
         rows = list(rows)
         if self.use_compiled and not self.has_params and self.input_schema is not None:
-            key = self._serving_key()
-            if self._compiled is None or self._compiled.key != key:
-                self._release_compiled()
-                self._compiled = CompiledRequestPlan(self, key)
-            return self._compiled.serve_rows(rows)
+            return self._compiled_plan().serve_rows(rows)
         return self.run_request(
             self.engine.spark.createDataFrame(rows, self.input_schema)
         ).collect()
+
+    def _compiled_plan(self) -> CompiledRequestPlan:
+        """The compiled plan for the engine's current state: the existing
+        plan when its key matches or it can catch up by staging the
+        request table's new INSERTs in its tail
+        (:meth:`CompiledRequestPlan.catch_up`); otherwise a recompile."""
+        key = self._serving_key()
+        if self._compiled is None or not self._compiled.catch_up(key):
+            self._release_compiled()
+            self._compiled = CompiledRequestPlan(self, key)
+        return self._compiled
+
+    def _inserts_since(self, compiled_key: tuple, key: tuple) -> Optional[list]:
+        """Rows INSERTed into the request table since ``compiled_key``
+        was taken, when those inserts are the only difference between it
+        and ``key``; ``None`` when anything else changed (another table's
+        epoch, TTL pin, mode, db) or the engine's insert log no longer
+        covers the span."""
+        (deps0, *rest0), (deps1, *rest1) = compiled_key, key
+        req = self.engine._loc(self.request_table)
+
+        def others(deps):
+            return [d for d in deps if d[0] != req]
+
+        epoch = dict(deps0).get(req)
+        if epoch is None or rest0 != rest1 or others(deps0) != others(deps1):
+            return None
+        return self.engine.inserts_since(self.request_table, epoch)
 
     def _serving_key(self) -> tuple:
         """Staleness token for the compiled plan: the epoch of EVERY table
@@ -256,10 +281,16 @@ class SqlDeployment(PreaggServing):
             self._compiled.release()
             self._compiled = None
 
-    def _serving_history(self, history: Optional[DataFrame]) -> DataFrame:
+    def _serving_history(
+        self, history: Optional[DataFrame], tail: Optional[DataFrame] = None
+    ) -> DataFrame:
         """Stored history for request-mode serving — TTL-filtered like every
         other online read (the reference's online storage GCs expired rows
         before serving sees them, so batch and request mode agree).
+
+        ``tail`` (a compiled plan's append tail) is unioned into the store
+        BEFORE any TTL filter, so rows inserted after the compile count
+        toward absolute/latest TTL and an unpinned bound's ``max(ts)``.
 
         DEPLOY-derived absolute indexes (``Engine._auto_index``) additionally
         bound THIS deployment's serving reads: the reference's storage
@@ -272,7 +303,10 @@ class SqlDeployment(PreaggServing):
             return history
         eng = self.engine
         db, bare = eng._loc(self.request_table)
-        df = eng._with_ttl(db, bare, eng.tables[self.request_table])
+        df = eng.tables[self.request_table]
+        if tail is not None:
+            df = df.unionByName(tail)
+        df = eng._with_ttl(db, bare, df)
         td = eng._db_defs.get(db, {}).get(bare)
         if td is None:
             return df
@@ -406,8 +440,9 @@ class SqlDeployment(PreaggServing):
         q: "P.Query",
         requests: DataFrame,
         history: Optional[DataFrame] = None,
+        tail: Optional[DataFrame] = None,
     ) -> DataFrame:
-        hist = self._serving_history(history)
+        hist = self._serving_history(history, tail)
         body = q.body
         hist = self._prune_history_to_request_keys(hist, requests, body)
         hist_from = self._history_from_ref(body)

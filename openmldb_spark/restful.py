@@ -397,13 +397,11 @@ class ApiServer:
                 )
         except ValueError:
             return _err("Translate to insert row failed")
-        new = eng.spark.createDataFrame([tuple(row)], store.schema)
         # PUT is an ONLINE insert (the reference's ExecuteInsert writes the
-        # tablet store regardless of session execute_mode); the epoch bump
-        # keeps derived caches (long-window pre-agg) honest for HTTP
-        # writes too (r9 review finding)
-        eng._dbs[db][t] = store.unionByName(new)
-        eng._bump_epoch(db, t)
+        # tablet store regardless of session execute_mode); it takes the
+        # INSERT path, so the epoch bump keeps derived caches (long-window
+        # pre-agg) honest and compiled plans serve it from their tail
+        eng._append_online(db, t, [tuple(row)])
         return _ok()
 
     # -- procedures / deployments --------------------------------------------

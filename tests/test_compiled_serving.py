@@ -97,6 +97,8 @@ def test_compiled_matches_uncached_path(spark):
 
 
 def test_dml_invalidates_compiled_plan(spark):
+    """An INSERT into the request table is served from the compiled
+    plan's append tail (same plan); a DELETE recompiles."""
     eng = _engine(spark)
     dep = eng.execute(f"DEPLOY dc3 {SQL}")
     req = _req(spark, dep, [(9, "aa", 40, 1590738995000)])
@@ -107,7 +109,171 @@ def test_dml_invalidates_compiled_plan(spark):
         "INSERT INTO t0 VALUES (4, 'aa', 100, 1590738994000)"
     )
     assert dep.run_request(req).collect()[0]["s"] == 30 + 31 + 100 + 40
-    assert dep._compiled is not first, "epoch bump did not recompile"
+    assert dep._compiled is first, "an INSERT recompiled the plan"
+    eng.execute("DELETE FROM t0 WHERE id = 1")
+    assert dep.run_request(req).collect()[0]["s"] == 31 + 100 + 40
+    assert dep._compiled is not first, "DELETE did not recompile"
+
+
+def _both_paths(spark, dep, rows):
+    """``rows`` served through the compiled plan and the uncompiled
+    per-call build, each sorted."""
+    compiled = sorted(map(tuple, dep.run_request_rows(_conv(rows))))
+    dep.use_compiled = False
+    try:
+        plain = sorted(
+            map(tuple, dep.run_request(_req(spark, dep, rows)).collect())
+        )
+    finally:
+        dep.use_compiled = True
+    return compiled, plain
+
+
+@pytest.mark.parametrize(
+    "ttl", ["TTL=2s, TTL_TYPE=absolute", "TTL=2, TTL_TYPE=latest"]
+)
+def test_inserts_interleaved_with_serves_use_the_tail(spark, ttl):
+    """K INSERTs interleaved with serves on a TTL table: the plan compiles
+    once, and every serve matches the uncompiled path row for row. With
+    no TTL pin the absolute bound's max(ts) moves with each insert, so
+    older rows expire through the tail; a latest TTL keeps the newest 2
+    rows per key, tail rows included."""
+    eng = Engine(spark)
+    eng.execute(
+        "CREATE TABLE t0 (id int, c1 string, c4 bigint, c7 timestamp,"
+        f" INDEX(KEY=(c1), TS=c7, {ttl}))"
+    )
+    eng.execute(
+        "INSERT INTO t0 VALUES (1, 'aa', 30, 1590738991000),"
+        " (2, 'aa', 31, 1590738992000), (3, 'bb', 50, 1590738993000)"
+    )
+    dep = eng.execute(f"DEPLOY dtail {SQL}")
+    first = None
+    for k in range(4):
+        ts = 1590738994000 + 1500 * k
+        req = [(100 + k, "aa", 1, ts + 700), (200 + k, "bb", 2, ts + 700)]
+        compiled, plain = _both_paths(spark, dep, req)
+        assert compiled == plain, (k, compiled, plain)
+        first = first or dep._compiled
+        assert dep._compiled is first, f"recompiled before insert {k}"
+        eng.execute(f"INSERT INTO t0 VALUES ({10 + k}, 'aa', {k + 5}, {ts})")
+    compiled, plain = _both_paths(spark, dep, [(300, "aa", 1, ts + 900)])
+    assert compiled == plain
+    assert dep._compiled is first
+    # the last insert (ts) is inside every TTL and the 10s window
+    assert compiled[0][2] >= 1 + 3 + 5
+
+
+def test_insert_into_last_join_right_side_recompiles(spark):
+    """An INSERT into a table other than the request table (here the LAST
+    JOIN right side, whose deduped form is materialized) recompiles, and
+    the serve sees the new right row."""
+    eng = _engine(spark)
+    eng.execute(
+        "CREATE TABLE tm1 (c1 string, v bigint, c7 timestamp,"
+        " INDEX(KEY=(c1), TS=c7))"
+    )
+    eng.execute(
+        "INSERT INTO tm1 VALUES ('aa', 7, 1590738991000),"
+        " ('aa', 8, 1590738992000), ('bb', 9, 1590738991000)"
+    )
+    dep = eng.execute(
+        "DEPLOY djoin SELECT t0.id, tm1.v AS rv FROM t0 "
+        "LAST JOIN tm1 ORDER BY tm1.c7 ON t0.c1 = tm1.c1"
+    )
+    req = [(9, "aa", 40, 1590738995000)]
+    assert _both_paths(spark, dep, req)[0] == [(9, 8)]
+    first = dep._compiled
+    assert first._materialized, "right side was not materialized"
+    eng.execute("INSERT INTO tm1 VALUES ('aa', 11, 1590738993000)")
+    compiled, plain = _both_paths(spark, dep, req)
+    assert compiled == plain == [(9, 11)]
+    assert dep._compiled is not first
+
+
+def test_tail_past_staging_size_recompiles(spark):
+    """Inserted rows that no longer fit the fixed-size tail make the next
+    serve recompile (its snapshot then holds them) instead of raising."""
+    from openmldb_spark.engine.compiled import STAGING_BYTES_CONF
+
+    spark.conf.set(STAGING_BYTES_CONF, "512")
+    try:
+        eng = _engine(spark)
+        dep = eng.execute(f"DEPLOY dover {SQL}")
+        req = [(9, "aa", 40, 1590738995000)]
+        assert _both_paths(spark, dep, req)[0][0][2] == 30 + 31 + 40
+        first = dep._compiled
+        eng.execute("INSERT INTO t0 VALUES (4, 'aa', 1, 1590738994000)")
+        assert _both_paths(spark, dep, req)[0][0][2] == 30 + 31 + 1 + 40
+        assert dep._compiled is first, "a fitting tail recompiled"
+        vals = ", ".join(
+            f"({20 + i}, 'aa', 2, {1590738994100 + i})" for i in range(20)
+        )
+        eng.execute(f"INSERT INTO t0 VALUES {vals}")
+        compiled, plain = _both_paths(spark, dep, req)
+        assert compiled == plain
+        assert compiled[0][2] == 30 + 31 + 1 + 40 + 2 * 20
+        assert dep._compiled is not first, "an overflowing tail did not recompile"
+    finally:
+        spark.conf.unset(STAGING_BYTES_CONF)
+
+
+def test_two_deployments_over_one_table_both_see_an_insert(spark):
+    """Each compiled plan keeps its own tail over the engine's one insert
+    log: both deployments serve the inserted row without recompiling."""
+    eng = _engine(spark)
+    dep1 = eng.execute(f"DEPLOY dtwo1 {SQL}")
+    dep2 = eng.execute(
+        "DEPLOY dtwo2 SELECT id, count(c4) OVER w1 as n FROM t0 WINDOW w1 AS"
+        " (PARTITION BY t0.c1 ORDER BY t0.c7 ROWS BETWEEN 10 PRECEDING AND"
+        " CURRENT ROW)"
+    )
+    req = [(9, "aa", 40, 1590738995000)]
+    assert dep1.run_request_rows(_conv(req))[0]["s"] == 30 + 31 + 40
+    assert dep2.run_request_rows(_conv(req))[0]["n"] == 3
+    plans = dep1._compiled, dep2._compiled
+    eng.execute("INSERT INTO t0 VALUES (4, 'aa', 100, 1590738994000)")
+    for dep in (dep1, dep2):
+        compiled, plain = _both_paths(spark, dep, req)
+        assert compiled == plain
+    assert compiled[0][1] == 4
+    assert dep1.run_request_rows(_conv(req))[0]["s"] == 30 + 31 + 100 + 40
+    assert (dep1._compiled, dep2._compiled) == plans
+
+
+def test_trimmed_insert_log_recompiles(spark, monkeypatch):
+    """A plan whose inserts fell out of the bounded insert log cannot
+    rebuild its tail and recompiles; the serve still counts every row."""
+    eng = _engine(spark)
+    monkeypatch.setattr(eng, "_INSERT_LOG_ROWS", 2)
+    dep = eng.execute(f"DEPLOY dtrim {SQL}")
+    req = [(9, "aa", 40, 1590738995000)]
+    dep.run_request_rows(_conv(req))
+    first = dep._compiled
+    epoch = eng.table_epoch("t0")
+    for k in range(3):
+        eng.execute(f"INSERT INTO t0 VALUES ({4 + k}, 'aa', 1, {1590738994000 + k})")
+    assert eng.inserts_since("t0", epoch) is None
+    assert len(eng.inserts_since("t0", epoch + 1)) == 2
+    assert dep.run_request_rows(_conv(req))[0]["s"] == 30 + 31 + 3 + 40
+    assert dep._compiled is not first
+
+
+def test_offer_refuses_the_tail_source(spark):
+    """The append tail is tagged like the request source, so no history
+    subtree reading it is ever materialized (its contents change after
+    the compile)."""
+    from openmldb_spark.engine import servingmat
+
+    eng = _engine(spark)
+    dep = eng.execute(f"DEPLOY dtailmat {SQL}")
+    dep.run_request_rows(_conv([(9, "aa", 40, 1590738995000)]))
+    tail = dep._compiled._tail
+    assert tail is not None
+    sink = []
+    with servingmat.collecting(sink):
+        derived = tail.groupBy("c1").count()
+        assert servingmat.offer(derived) is derived and sink == []
 
 
 def test_explicit_history_and_parameters_bypass_compiled(spark):

@@ -37,6 +37,53 @@ def test_insert_column_list_and_nulls(eng):
     assert row["a"] == 7 and row["b"] is None and row["c"] == 1.5
 
 
+def test_insert_adds_one_partition_per_row(eng):
+    """INSERT stores its rows as a driver-local relation: a one-row
+    insert adds one partition to later reads, not defaultParallelism."""
+    eng.execute("CREATE TABLE tp (id int, v double)")
+    base = eng.tables["tp"].rdd.getNumPartitions()
+    for k in range(3):
+        eng.execute(f"INSERT INTO tp VALUES ({k}, 1.5)")
+    assert eng.tables["tp"].rdd.getNumPartitions() == base + 3
+    assert sorted(r["id"] for r in eng.execute("SELECT id FROM tp").collect()) == [0, 1, 2]
+
+
+def test_insert_round_trips_every_simple_type_on_non_utc_session(eng, spark):
+    """Every simple type reads back from INSERT -> SELECT unchanged under a
+    non-UTC session timezone: an ms-epoch timestamp keeps its instant, a
+    wall-clock string its wall clock, and nulls stay null."""
+    import datetime
+
+    tz0 = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        eng.execute(
+            "CREATE TABLE ty (b bool, s16 smallint, i int, i64 bigint,"
+            " f float, d double, s string, dt date, ts timestamp,"
+            " ts2 timestamp)"
+        )
+        eng.execute(
+            "INSERT INTO ty VALUES (true, -7, 2147483647, 9007199254740993,"
+            " 1.5, -0.25, 'comma, ünïcode', '1999-12-31', 1590738991123,"
+            " '2020-05-29 08:01:02'),"
+            " (NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL)"
+        )
+        got = eng.execute("SELECT *, unix_millis(ts) AS ms FROM ty").collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz0)
+    got.sort(key=lambda r: r["i64"] is not None)
+    assert tuple(got[0]) == (None,) * 11
+    r = got[1].asDict()
+    assert r.pop("ms") == 1590738991123
+    assert r.pop("ts") == datetime.datetime.fromtimestamp(1590738991.123)
+    assert r == {
+        "b": True, "s16": -7, "i": 2147483647, "i64": 9007199254740993,
+        "f": 1.5, "d": -0.25, "s": "comma, ünïcode",
+        "dt": datetime.date(1999, 12, 31),
+        "ts2": datetime.datetime(2020, 5, 29, 8, 1, 2),
+    }
+
+
 def test_load_and_select_into_roundtrip(eng, tmp_path):
     csv = tmp_path / "in.csv"
     csv.write_text("id,name\n1,x\n2,y\n")
