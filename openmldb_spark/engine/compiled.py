@@ -5,9 +5,11 @@ compiled-plan cache, ``hybridse/src/vm/engine.cc:453-496``). Split from
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import tempfile
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -53,12 +55,12 @@ DEFAULT_STAGING_BYTES = 262_144
 #: AQE's per-stage materialization and 32-task shuffle stages are built
 #: for data-sized queries, but a serve's shuffles carry request-row-sized
 #: data (history is key-pruned), so the fixed tiny plan wins ~40% wall
-#: latency. Serves re-root the compiled plan's ANALYZED tree onto the
-#: clone, so physical planning picks the serving confs up while the
-#: user's session confs are NEVER touched — a batch query planned
-#: concurrently with a serve sees its own AQE/partition settings
-#: (the r11 swap-and-restore was session-global and racy). Set false to
-#: serve on the engine session with its normal confs.
+#: latency. The compiled plan's physical plan is built once on the
+#: clone, so it carries the serving confs while the user's session confs
+#: are NEVER touched — a batch query planned concurrently with a serve
+#: sees its own AQE/partition settings (the r11 swap-and-restore was
+#: session-global and racy). Set false to serve on the engine session
+#: with its normal confs (each serve then plans afresh there).
 FAST_CONFS_CONF = "spark.openmldb.serving.fastConfs"
 SERVING_SHUFFLE_PARTITIONS_CONF = "spark.openmldb.serving.shufflePartitions"
 
@@ -282,6 +284,53 @@ def _serving_session(spark):
     return clone
 
 
+class _ServePlan(NamedTuple):
+    """A compiled plan's executed physical plan on the serving clone.
+    ``confs`` are the engine-session values it was planned under
+    (``_SEMANTIC_CONFS``, then the serving fan-out); ``executed`` is
+    None when a copy cannot refresh the plan (see
+    :meth:`CompiledRequestPlan._plan_serve`); ``reuse`` says each copy
+    needs Catalyst's exchange-reuse rule re-applied."""
+
+    confs: tuple
+    executed: object
+    reuse: bool
+
+
+def _plan_nodes(plan):
+    """Every node of a JVM ``SparkPlan`` tree, parents first."""
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def _reuse_rule(session):
+    """Catalyst's exchange/subquery reuse rule (the last step of physical
+    planning), to apply by hand."""
+    pkg = session._jvm.org.apache.spark.sql.execution.reuse
+    return getattr(getattr(pkg, "ReuseExchangeAndSubquery$"), "MODULE$")
+
+
+@contextlib.contextmanager
+def _active_session(session):
+    """Make ``session`` the JVM thread's active SparkSession for the
+    block. Plan nodes built outside Catalyst's own phases (``clone``,
+    a rule applied by hand) take the thread's active session for their
+    conf and SparkContext — and a py4j thread other than the one that
+    created the engine session has none."""
+    cls = session._jvm.org.apache.spark.sql.classic.SparkSession
+    prev = cls.getActiveSession()
+    cls.setActiveSession(session._jsparkSession)
+    try:
+        yield
+    finally:
+        if prev.isDefined():
+            cls.setActiveSession(prev.get())
+        else:
+            cls.clearActiveSession()
+
+
 def _staged_reader(path: str):
     """Task-side reader for the compiled plan's request source: yields the
     Arrow batches staged at ``path`` AT EXECUTION TIME — the plan is fixed,
@@ -320,14 +369,17 @@ class CompiledRequestPlan:
       zero Python stages per serve (a 1-row ``mapInArrow`` roundtrip
       costs ~200 ms/execution here, the dominant r10 latency term) —
       while nested types fall back to ``mapInArrow`` over Arrow IPC.
-    - each serve returns a FRESH Dataset over the cached ANALYZED plan
-      (re-rooted onto the isolated serving session, else
-      ``.where(lit(True))``): re-collecting the same Dataset would REUSE
-      its shuffle map outputs (ShuffleExchangeExec caches its ShuffledRowRDD
-      and the DAGScheduler skips registered map stages), silently serving
-      the PREVIOUS request's rows. Fresh physical planning per call is the
-      correct/fast split: analysis of an already-resolved tree is cheap;
-      the Python-side lowering never re-runs.
+    - the EXECUTED physical plan is built once, on the isolated serving
+      session, and each serve runs a fresh ``clone()`` of it, wrapped
+      back into a DataFrame over the copy's RDD. Re-running the same
+      plan would REUSE its shuffle map outputs and broadcasts
+      (ShuffleExchangeExec caches its ShuffledRowRDD, BroadcastExchangeExec
+      its broadcast future), silently serving the PREVIOUS request's
+      rows; the copy gives every exchange a new shuffle id and broadcast
+      future, and skips the per-serve optimizer and planner runs. Plans
+      a copy cannot refresh (no serving clone, ``FAST_CONFS_CONF`` off,
+      subquery expressions) serve a fresh ``.where(lit(True))`` Dataset
+      on the engine session, planned per call.
     - the plan's history is the request table's store snapshot taken at
       compile time UNION a plan-private append tail: a second fixed-size
       staged text file (JVM mode only), unioned in before TTL so every
@@ -427,40 +479,44 @@ class CompiledRequestPlan:
             self.plan = dep._run_request_on(
                 dep._query_with_params(None), src, None, tail=tail
             )
+        # keep each cache's builder too: after a spark.catalog.clearCache()
+        # the next serve's plan copy rebuilds the cache outside the cache
+        # manager, where only release() can still drop it
+        self._caches = []
         for df in self._materialized:
             df.count()
-        # isolated serving session + the compiled plan's analyzed tree:
-        # each serve re-roots the (immutable) tree onto the clone via
-        # Dataset.ofRows — a FRESH QueryExecution per call (no stale
-        # shuffle reuse) planned under the serving confs, with the user's
-        # session confs never touched. Availability-probed once; any
-        # failure falls back to serving on the engine session.
+            rel = df._jdf.queryExecution().withCachedData()
+            if rel.nodeName() == "InMemoryRelation":
+                self._caches.append(rel.cacheBuilder())
+        # isolated serving session + the serve's executed plan, built once
+        # here (see _serve_df). Availability-probed once; any failure
+        # falls back to serving on the engine session.
         self._lp = self.plan._jdf.queryExecution().analyzed()
+        self._physical: _ServePlan | None = None
         try:
             self._serve_spark = _serving_session(self.spark)
-            self._reroot(self._serve_spark)._jdf.queryExecution()
+            confs = self._serve_confs()
+            if confs is not None:
+                self._physical = self._plan_serve(confs)
         except Exception:  # pragma: no cover - e.g. non-classic backends
             self._serve_spark = None
 
-    def _reroot(self, session) -> DataFrame:
-        jdf = self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-            session._jsparkSession, self._lp
-        )
-        return DataFrame(jdf, session)
-
     #: REGISTRY CONTRACT: any runtime conf that changes serve RESULT
     #: VALUES (not merely plan shape) and can legitimately be SET after a
-    #: deployment compiles MUST be listed here — it is re-synced from the
-    #: engine session onto the serving clone before every serve (a few
-    #: gets, rarely a set), so a post-deploy ``SET`` reaches compiled
-    #: serves exactly like uncompiled ones. Planning confs (AQE, shuffle
-    #: fan-out) intentionally stay pinned to the serving profile; the
-    #: serve-time shuffle fan-out itself is the one planning knob that
-    #: re-syncs (SERVING_SHUFFLE_PARTITIONS_CONF below), since it is this
-    #: module's own documented surface. Anything semantics-bearing left
-    #: off this list silently diverges between the two paths (ADVICE r12
-    #: named caseSensitive / timeParserPolicy / mapKeyDedupPolicy — now
-    #: listed).
+    #: deployment compiles MUST be listed here — the serve's physical
+    #: plan records the engine session's values it was planned under,
+    #: and a serve that reads different ones copies them onto the serving
+    #: clone and re-plans once, so a post-deploy ``SET`` reaches compiled
+    #: serves like uncompiled ones. Re-planning does not re-analyze: an
+    #: expression the compile's analysis bound to a conf value (the
+    #: session timezone of ``hour(ts)``) keeps it. Planning confs (AQE,
+    #: shuffle fan-out) intentionally stay pinned to the serving profile;
+    #: the serve-time shuffle fan-out itself is the one planning knob that
+    #: re-plans the same way (SERVING_SHUFFLE_PARTITIONS_CONF below),
+    #: since it is this module's own documented surface. Anything
+    #: semantics-bearing left off this list silently diverges between the
+    #: two paths (ADVICE r12 named caseSensitive / timeParserPolicy /
+    #: mapKeyDedupPolicy — now listed).
     _SEMANTIC_CONFS = (
         "spark.sql.session.timeZone",
         "spark.sql.ansi.enabled",
@@ -469,30 +525,89 @@ class CompiledRequestPlan:
         "spark.sql.mapKeyDedupPolicy",
     )
 
-    def _fresh_serve_df(self) -> DataFrame:
-        """A fresh Dataset over the compiled plan for one serve — on the
-        serving clone when enabled (serve-time opt-out honored), else the
-        engine session (``.where(lit(True))`` forces a new physical plan
-        there; see the class docstring's stale-shuffle note). The clone's
-        conf snapshot froze at compile time; the semantics-bearing confs
-        are re-synced per serve so a post-deploy ``SET`` of the session
-        timezone or ANSI mode reaches compiled serves like it reaches the
-        uncompiled path (planning confs intentionally stay pinned)."""
-        if (
-            self._serve_spark is not None
-            and self.spark.conf.get(FAST_CONFS_CONF, "true") == "true"
-        ):
-            for k in self._SEMANTIC_CONFS:
-                v = self.spark.conf.get(k, None)
-                if v is not None and self._serve_spark.conf.get(k, None) != v:
-                    self._serve_spark.conf.set(k, v)
-            # the serving fan-out knob is re-read per serve so a later
-            # SET takes effect without redeploying (ADVICE r12: it froze
-            # at compile time)
-            fan = self.spark.conf.get(SERVING_SHUFFLE_PARTITIONS_CONF, "1")
-            if self._serve_spark.conf.get("spark.sql.shuffle.partitions") != fan:
-                self._serve_spark.conf.set("spark.sql.shuffle.partitions", fan)
-            return self._reroot(self._serve_spark)
+    def _serve_confs(self) -> tuple | None:
+        """The engine session's ``_SEMANTIC_CONFS`` values and serving
+        fan-out a serve's physical plan must match, or None when serves
+        take the engine-session path: no serving clone, or
+        ``FAST_CONFS_CONF`` off (read per serve) — that session plans with
+        AQE, and a copy of an ``AdaptiveSparkPlanExec`` shares its stage
+        cache with the original."""
+        get = self.spark.conf.get
+        if self._serve_spark is None or get(FAST_CONFS_CONF, "true") != "true":
+            return None
+        return tuple(get(k, None) for k in self._SEMANTIC_CONFS) + (
+            get(SERVING_SHUFFLE_PARTITIONS_CONF, "1"),
+        )
+
+    def _plan_serve(self, confs: tuple) -> _ServePlan:
+        """Copy ``confs`` onto the serving clone and build the compiled
+        query's executed plan there, once per distinct ``confs``.
+
+        A plan whose nodes hold subquery expressions gets no
+        ``executed`` and serves on the engine session: a copied
+        ``ScalarSubquery``/``InSubqueryExec`` keeps its ``SubqueryExec``'s
+        cached result. The plan is built with exchange reuse OFF: a
+        ``ReusedExchangeExec`` is a leaf pointing at another node, which
+        ``clone()`` does not copy, so the copy of a reuse-planned tree
+        would run the cached plan's own exchange — built by the first
+        serve and kept for every later one. Each copy instead gets
+        Catalyst's reuse rule applied afresh (``reuse``), when the rule
+        finds anything to share."""
+        ss = self._serve_spark
+        for k, v in zip(self._SEMANTIC_CONFS, confs):
+            if v is not None and ss.conf.get(k, None) != v:
+                ss.conf.set(k, v)
+        ss.conf.set("spark.sql.shuffle.partitions", confs[-1])
+        reuse_conf = ss.conf.get("spark.sql.exchange.reuse")
+        ss.conf.set("spark.sql.exchange.reuse", "false")
+        try:
+            executed = (
+                self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+                    ss._jsparkSession, self._lp
+                )
+                .queryExecution()
+                .executedPlan()
+            )
+        finally:
+            ss.conf.set("spark.sql.exchange.reuse", reuse_conf)
+        if any(not n.subqueries().isEmpty() for n in _plan_nodes(executed)):
+            return _ServePlan(confs, None, False)
+        shares = False
+        if reuse_conf == "true":
+            with _active_session(ss):
+                shared = _reuse_rule(ss).apply(executed.clone())
+            shares = any(
+                n.nodeName() == "ReusedExchange" for n in _plan_nodes(shared)
+            )
+        return _ServePlan(confs, executed, shares)
+
+    def _serve_df(self) -> DataFrame:
+        """One serve's result as a DataFrame no earlier serve shares any
+        exchange with (see the class docstring's stale-shuffle note).
+
+        On the serving clone: a ``clone()`` of the cached executed plan
+        (re-planned first if the engine session's confs moved, see
+        ``_SEMANTIC_CONFS``) is executed — the broadcasts run now, the
+        rest when the caller collects — and its RDD wrapped as a
+        DataFrame. Otherwise a fresh ``.where(lit(True))`` Dataset on the
+        engine session, planned per call."""
+        confs = self._serve_confs()
+        if confs is not None:
+            if self._physical is None or self._physical.confs != confs:
+                self._physical = self._plan_serve(confs)
+            if self._physical.executed is not None:
+                ss = self._serve_spark
+                with _active_session(ss):
+                    plan = self._physical.executed.clone()
+                    if self._physical.reuse:
+                        plan = _reuse_rule(ss).apply(plan)
+                    rdd = plan.execute()
+                return DataFrame(
+                    ss._jsparkSession.internalCreateDataFrame(
+                        rdd, self.plan._jdf.schema(), False
+                    ),
+                    ss,
+                )
         return self.plan.where(F.lit(True))
 
     def _write_staged(self, table) -> None:
@@ -574,19 +689,21 @@ class CompiledRequestPlan:
         ``toArrow`` on the result would run two) and is handed back as a
         ``LocalRelation``-backed DataFrame (job-free to collect again),
         so a driver-local request round-trips in a single Spark job,
-        matching the rows arm's job count."""
-        table = self._local_request_table(requests)
-        if table is None:
-            table = requests.toArrow()
+        matching the rows arm's job count (broadcast jobs aside). Both
+        arms label their jobs ``serve <deployment>``."""
         out_schema = self.plan.schema
-        with self._lock:
-            self._write_staged(table)
-            sdf = self._fresh_serve_df()
-            proj, ts_idx = _exact_collect_plan(sdf, out_schema)
-            if proj is None:  # nested/duplicate-name timestamps: exact, 2 jobs
-                out = sdf.toArrow()
-            else:
-                out = _rows_to_arrow(proj.collect(), ts_idx, out_schema)
+        with self._labelled():
+            table = self._local_request_table(requests)
+            if table is None:
+                table = requests.toArrow()
+            with self._lock:
+                self._write_staged(table)
+                sdf = self._serve_df()
+                proj, ts_idx = _exact_collect_plan(sdf, out_schema)
+                if proj is None:  # nested/duplicate-name timestamps: 2 jobs
+                    out = sdf.toArrow()
+                else:
+                    out = _rows_to_arrow(proj.collect(), ts_idx, out_schema)
         return self.spark.createDataFrame(out, schema=out_schema)
 
     def serve_rows(self, rows: list) -> list:
@@ -599,13 +716,27 @@ class CompiledRequestPlan:
 
         if not rows:
             return []
-        with self._lock:
+        with self._labelled(), self._lock:
             self._write_staged(
                 LocalDataToArrowConversion.convert(
                     rows, self.dep.input_schema, False
                 )
             )
-            return self._fresh_serve_df().collect()
+            return self._serve_df().collect()
+
+    @contextlib.contextmanager
+    def _labelled(self):
+        """Label the Spark jobs this thread starts ``serve <deployment>``
+        and restore the caller's label after. Only the description is
+        set: the job group stays the caller's (``jobs.py`` STOP JOB
+        cancels by group)."""
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"serve {self.dep.name}")
+        try:
+            yield
+        finally:
+            sc.setLocalProperty("spark.job.description", prev)
 
     def release(self) -> None:
         """Drop the staged directory and resident join-side caches —
@@ -616,5 +747,7 @@ class CompiledRequestPlan:
         with self._lock:
             for df in self._materialized:
                 df.unpersist()
+            for builder in self._caches:
+                builder.clearCache(False)
             self._materialized.clear()
             shutil.rmtree(self._dir, ignore_errors=True)

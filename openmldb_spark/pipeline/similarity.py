@@ -339,18 +339,6 @@ def _band_seeds(seed, bands: int) -> list:
     return [seed] if bands <= 1 else [f"{seed}|{t}" for t in range(bands)]
 
 
-def _lit_double_array(vals) -> Column:
-    """One-parse array<double> literal. ``F.array(*[F.lit(v) ...])`` costs a
-    py4j round-trip per element — at 8 planes x 64 dims x 2 join sides that
-    is ~1000 driver calls per plan build, and plan BUILD (not execution)
-    measured as the dominant cost of the portable LSH bench query (guide
-    §1: 1.3-1.7s build vs 0.5-0.7s exec at sf0.1). A single ``F.expr``
-    parse builds the same CreateArray(double literals) JVM-side.
-    ``repr(float)`` is the shortest round-trip form and Spark parses
-    double literals correctly rounded, so values are bit-identical."""
-    return F.expr("array(" + ",".join(f"{float(v)!r}D" for v in vals) + ")")
-
-
 def _portable_bucket(
     df: DataFrame,
     id_col: str,

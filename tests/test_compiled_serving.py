@@ -524,10 +524,9 @@ def test_serving_session_isolated_from_batch_confs(spark):
     assert cp._serve_spark.conf.get("spark.sql.adaptive.enabled") == "false"
     assert cp._serve_spark.conf.get("spark.sql.shuffle.partitions") == "1"
     # the serve's own physical plan is non-AQE and clone-rooted...
-    sdf = cp._fresh_serve_df()
-    assert sdf.sparkSession is cp._serve_spark
-    plan = sdf._jdf.queryExecution().executedPlan().toString()
-    assert "AdaptiveSparkPlan" not in plan
+    executed = cp._physical.executed
+    assert executed.session().equals(cp._serve_spark._jsparkSession)
+    assert "AdaptiveSparkPlan" not in executed.toString()
     # ...while batch queries planned concurrently with serves keep AQE:
     # hammer explains on the engine session during in-flight serves
     aqe_seen = []
@@ -558,7 +557,7 @@ def test_serving_session_isolated_from_batch_confs(spark):
     # serve-time opt-out: back to the engine session with its own confs
     spark.conf.set(FAST_CONFS_CONF, "false")
     try:
-        assert cp._fresh_serve_df().sparkSession is spark
+        assert cp._serve_df().sparkSession is spark
         assert len(dep.run_request_rows(_conv([(9, "bb", 1, 1590738995000)]))) == 1
     finally:
         spark.conf.unset(FAST_CONFS_CONF)
@@ -667,9 +666,9 @@ def test_materialized_join_side_cache_hits_from_serving_clone(spark):
     assert [(r["id"], r["rv"]) for r in got] == [(9, 8)]
     cp = dep._compiled
     assert cp is not None and cp._materialized, "right side was not offered"
-    sdf = cp._fresh_serve_df()
-    assert sdf.sparkSession is cp._serve_spark
-    plan = sdf._jdf.queryExecution().executedPlan().toString()
+    executed = cp._physical.executed
+    assert executed.session().equals(cp._serve_spark._jsparkSession)
+    plan = executed.toString()
     assert "InMemoryTableScan" in plan, plan
 
 
@@ -720,24 +719,50 @@ def test_empty_request_dataframe_serves_empty(spark):
     assert got.collect()[0]["s"] == 30 + 31 + 40
 
 
-def test_semantic_confs_resync_to_serving_clone(spark):
+def _count_plans(monkeypatch) -> list:
+    """Record every physical planning of a compiled serve (the confs it
+    planned under), as test_lowering_runs_once_across_requests counts
+    lowering."""
+    from openmldb_spark.engine.compiled import CompiledRequestPlan
+
+    calls = []
+    orig = CompiledRequestPlan._plan_serve
+
+    def counting(self, confs):
+        calls.append(confs)
+        return orig(self, confs)
+
+    monkeypatch.setattr(CompiledRequestPlan, "_plan_serve", counting)
+    return calls
+
+
+def test_semantic_confs_resync_to_serving_clone(spark, monkeypatch):
     """The clone's conf snapshot froze at compile; a post-deploy SET of a
     semantics-bearing conf (session timezone) must reach compiled serves
-    like it reaches the uncompiled path."""
+    like it reaches the uncompiled path: the next serve re-plans once on
+    the clone under the new value, and later serves reuse that plan."""
     eng = _engine(spark)
     dep = eng.execute(f"DEPLOY dsync {SQL}")
     dep.run_request_rows(_conv([(9, "aa", 40, 1590738995000)]))
     cp = dep._compiled
     assert cp is not None and cp._serve_spark is not None
+    plans = _count_plans(monkeypatch)
     tz0 = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
     try:
-        sdf = cp._fresh_serve_df()
+        req = [(10, "aa", 1, 1590738996000)]
+        compiled, plain = _both_paths(spark, dep, req)
+        assert compiled == plain
+        dep.run_request_rows(_conv(req))
+        assert len(plans) == 1, plans
         assert (
             cp._serve_spark.conf.get("spark.sql.session.timeZone")
             == "Asia/Tokyo"
         )
-        assert sdf.sparkSession is cp._serve_spark
+        assert cp._physical.executed.session().equals(
+            cp._serve_spark._jsparkSession
+        )
+        assert dep._compiled is cp
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz0)
 
@@ -825,10 +850,12 @@ def test_local_relation_requests_stage_without_a_job(spark):
     assert n_rdd == n_rows + 1, (n_rdd, n_rows)
 
 
-def test_serving_shuffle_partitions_resyncs_per_serve(spark):
+def test_serving_shuffle_partitions_resyncs_per_serve(spark, monkeypatch):
     """ADVICE r12: SERVING_SHUFFLE_PARTITIONS_CONF was read once at
-    compile, so a later SET was silently ignored; it now re-syncs onto
-    the serving clone before every serve."""
+    compile, so a later SET was silently ignored; the next serve now
+    re-plans once on the serving clone with the new fan-out."""
+    import re
+
     from openmldb_spark.engine.compiled import SERVING_SHUFFLE_PARTITIONS_CONF
 
     eng = _engine(spark)
@@ -837,29 +864,43 @@ def test_serving_shuffle_partitions_resyncs_per_serve(spark):
     cp = dep._compiled
     assert cp is not None and cp._serve_spark is not None
     assert cp._serve_spark.conf.get("spark.sql.shuffle.partitions") == "1"
+    plans = _count_plans(monkeypatch)
     spark.conf.set(SERVING_SHUFFLE_PARTITIONS_CONF, "2")
     try:
-        got = dep.run_request_rows(_conv([(10, "aa", 1, 1590738996000)]))
-        assert len(got) == 1
+        req = [(10, "aa", 1, 1590738996000)]
+        compiled, plain = _both_paths(spark, dep, req)
+        assert len(compiled) == 1 and compiled == plain
+        dep.run_request_rows(_conv(req))
+        assert len(plans) == 1, plans
         assert cp._serve_spark.conf.get("spark.sql.shuffle.partitions") == "2"
+        assert re.search(
+            r"hashpartitioning\([^()]*, 2\)", cp._physical.executed.toString()
+        )
     finally:
         spark.conf.unset(SERVING_SHUFFLE_PARTITIONS_CONF)
         dep.run_request_rows(_conv([(11, "aa", 1, 1590738997000)]))
         assert cp._serve_spark.conf.get("spark.sql.shuffle.partitions") == "1"
+        assert len(plans) == 2, plans
 
 
-def test_case_sensitivity_conf_reaches_compiled_serves(spark):
+def test_case_sensitivity_conf_reaches_compiled_serves(spark, monkeypatch):
     """The broadened semantic-conf registry: a post-deploy SET of
     spark.sql.caseSensitive reaches the serving clone (the registry
-    contract: semantics-bearing runtime confs re-sync per serve)."""
+    contract: a change of a semantics-bearing runtime conf re-plans the
+    next serve once)."""
     eng = _engine(spark)
     dep = eng.execute(f"DEPLOY dcase {SQL}")
     dep.run_request_rows(_conv([(9, "aa", 40, 1590738995000)]))
     cp = dep._compiled
     assert cp is not None and cp._serve_spark is not None
+    plans = _count_plans(monkeypatch)
     spark.conf.set("spark.sql.caseSensitive", "true")
     try:
-        cp._fresh_serve_df()
+        req = [(10, "bb", 1, 1590738996000)]
+        compiled, plain = _both_paths(spark, dep, req)
+        assert compiled == plain
+        dep.run_request_rows(_conv(req))
+        assert len(plans) == 1, plans
         assert cp._serve_spark.conf.get("spark.sql.caseSensitive") == "true"
     finally:
         spark.conf.set("spark.sql.caseSensitive", "false")
@@ -903,3 +944,244 @@ def test_exact_collect_plan_handles_dotted_and_nested_names(spark):
     )
     dup = StructType([StructField("x", LongType()), StructField("x", LongType())])
     assert _exact_collect_plan(spark.createDataFrame([], dup), dup) == (None, None)
+
+
+def test_serves_plan_the_query_once(spark, monkeypatch):
+    """The plan-once pin: the compile builds the serve's physical plan
+    and N serves run copies of it, planning nothing themselves."""
+    plans = _count_plans(monkeypatch)
+    eng = _engine(spark)
+    dep = eng.execute(f"DEPLOY dplan1 {SQL}")
+    for i, key in enumerate(["aa", "bb", "aa", "cc"]):
+        compiled, plain = _both_paths(
+            spark, dep, [(20 + i, key, i, 1590738995000 + i)]
+        )
+        assert compiled == plain, (key, compiled, plain)
+    assert len(plans) == 1, f"planned {len(plans)} times for 4 serves"
+
+
+def _two_window_last_join_deploy(spark, name):
+    """The serving benchmark's shape at test size: two windows over
+    key-pruned history plus a LAST JOIN whose deduped right side is
+    materialized."""
+    eng = _engine(spark)
+    eng.execute(
+        "CREATE TABLE tside (k string, v bigint, kts timestamp,"
+        " INDEX(KEY=(k), TS=kts))"
+    )
+    eng.execute(
+        "INSERT INTO tside VALUES ('aa', 7, 1590738991000),"
+        " ('aa', 8, 1590738992000), ('bb', 9, 1590738991000),"
+        " ('cc', 5, 1590738991000)"
+    )
+    return eng.execute(
+        f"DEPLOY {name} SELECT id, c1, sum(c4) OVER w1 AS s,"
+        " count(c4) OVER w2 AS n, tside.v AS rv FROM t0"
+        " LAST JOIN tside ORDER BY tside.kts ON t0.c1 = tside.k"
+        " WINDOW w1 AS (PARTITION BY t0.c1 ORDER BY t0.c7 ROWS_RANGE"
+        " BETWEEN 10s PRECEDING AND CURRENT ROW),"
+        " w2 AS (PARTITION BY t0.c1 ORDER BY t0.c7 ROWS BETWEEN 100"
+        " PRECEDING AND CURRENT ROW)"
+    )
+
+
+def test_plan_copies_share_no_exchange_across_serves(spark):
+    """Consecutive serves with different keys each get their own
+    shuffles and broadcasts: a copy that ran any exchange of an earlier
+    serve (the request-key broadcast that prunes history, or a reused
+    join-side broadcast) would serve that serve's rows."""
+    dep = _two_window_last_join_deploy(spark, "dcopy")
+    want_s = {"aa": 30 + 31, "bb": 50, "cc": 0}
+    for i, key in enumerate(["aa", "bb", "cc"]):
+        req = [(40 + i, key, 3, 1590738995000 + i)]
+        compiled, plain = _both_paths(spark, dep, req)
+        assert compiled == plain, (key, compiled, plain)
+        assert compiled[0][2] == want_s[key] + 3
+    cp = dep._compiled
+    assert cp._materialized, "the LAST JOIN side was not materialized"
+    # the join side's broadcast is shared by the request and history
+    # arms: each copy re-applies exchange reuse within itself
+    assert cp._physical.reuse
+
+
+def test_plan_copies_rebind_reused_request_exchanges(spark):
+    """Two windows over different partition keys share a broadcast of
+    the staged request rows (a ReusedExchange). Each serve's copy must
+    point that reuse at its own broadcast: one that kept pointing at the
+    cached plan's exchange would serve the first request's rows again."""
+    eng = _engine(spark)
+    dep = eng.execute(
+        "DEPLOY dreuse SELECT id, sum(c4) OVER w1 AS s, count(c4) OVER w2"
+        " AS n FROM t0 WINDOW w1 AS (PARTITION BY c1 ORDER BY c7 ROWS_RANGE"
+        " BETWEEN 10s PRECEDING AND CURRENT ROW), w2 AS (PARTITION BY id"
+        " ORDER BY c7 ROWS BETWEEN 10 PRECEDING AND CURRENT ROW)"
+    )
+    for i, (rid, key) in enumerate([(1, "aa"), (3, "bb"), (2, "cc")]):
+        req = [(rid, key, 5, 1590738995000 + i)]
+        compiled, plain = _both_paths(spark, dep, req)
+        assert compiled == plain, (key, compiled, plain)
+    assert dep._compiled._physical.reuse
+
+
+def test_serve_after_clear_cache_still_matches(spark):
+    """clearCache drops the materialized join side the cached physical
+    plan scans; the next serve rebuilds it and still matches, and
+    dropping the deployment releases the rebuilt cache."""
+    dep = _two_window_last_join_deploy(spark, "dclear")
+    req = [(50, "aa", 1, 1590738995000)]
+    compiled, plain = _both_paths(spark, dep, req)
+    assert compiled == plain
+    cp = dep._compiled
+
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    spark.catalog.clearCache()
+    kept = persisted()  # RDDs persisted outside the cache manager
+    for i, key in enumerate(["bb", "aa"]):
+        req = [(51 + i, key, 2, 1590738996000 + i)]
+        compiled, plain = _both_paths(spark, dep, req)
+        assert compiled == plain, (key, compiled, plain)
+    assert dep._compiled is cp
+    assert persisted() == kept + 1  # the join side, rebuilt by the serves
+    dep.engine.execute("DROP DEPLOYMENT dclear")
+    assert persisted() == kept
+
+
+def test_uncopyable_plans_serve_per_call(spark, monkeypatch):
+    """Plans a copy cannot refresh serve a fresh engine-session Dataset
+    per call and still match: with FAST_CONFS_CONF off (AQE plans share
+    their stage cache across copies), and when the plan holds a subquery
+    expression (a copied ScalarSubquery keeps its cached result)."""
+    from openmldb_spark.engine.compiled import FAST_CONFS_CONF
+
+    eng = _engine(spark)
+    dep = eng.execute(f"DEPLOY dnofast {SQL}")
+    dep.run_request_rows(_conv([(9, "aa", 40, 1590738995000)]))
+    cp = dep._compiled
+    plans = _count_plans(monkeypatch)
+    spark.conf.set(FAST_CONFS_CONF, "false")
+    try:
+        for i, key in enumerate(["aa", "bb"]):
+            compiled, plain = _both_paths(
+                spark, dep, [(60 + i, key, 1, 1590738995000 + i)]
+            )
+            assert compiled == plain, (key, compiled, plain)
+        assert cp._serve_df().sparkSession is spark
+        assert plans == []
+    finally:
+        spark.conf.unset(FAST_CONFS_CONF)
+
+    base = spark.createDataFrame(
+        _conv(ROWS), "id int, c1 string, c4 bigint, c7 timestamp"
+    )
+    base.createOrReplaceTempView("sq_base")
+    eng2 = Engine(spark)
+    eng2.register(
+        "tsq",
+        spark.sql(
+            "SELECT * FROM sq_base WHERE c4 > (SELECT min(c4) FROM sq_base)"
+        ),
+    )
+    dep2 = eng2.execute(
+        "DEPLOY dsubq SELECT id, c1, sum(c4) OVER w1 as s FROM tsq WINDOW w1"
+        " AS (PARTITION BY tsq.c1 ORDER BY tsq.c7 ROWS_RANGE BETWEEN 10s"
+        " PRECEDING AND CURRENT ROW)"
+    )
+    for i, key in enumerate(["aa", "bb", "aa"]):
+        compiled, plain = _both_paths(
+            spark, dep2, [(70 + i, key, 1, 1590738995000 + i)]
+        )
+        assert compiled == plain, (key, compiled, plain)
+    # the subquery drops row 1 (the minimum) from the history
+    assert compiled[0][2] == 31 + 1
+    assert dep2._compiled._physical.executed is None
+
+
+def test_serve_jobs_carry_the_deployment_label(spark):
+    """Every job of a compiled serve (broadcast jobs included) carries
+    the description ``serve <deployment>`` and stays in the caller's job
+    group; the caller's description is restored after the serve."""
+    eng = _engine(spark)
+    dep = eng.execute(f"DEPLOY dlabel {SQL}")
+    dep.run_request_rows(_conv([(0, "aa", 0, 1590738995000)]))  # compile
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def last_ungrouped_job():
+        # job ids are monotone; this session runs jobs outside any group
+        ids = jsc.statusTracker().getJobIdsForGroup(None)
+        return max(ids) if ids else -1
+
+    before = last_ungrouped_job()
+    sc.setJobGroup("caller-group", "caller label")
+    try:
+        got = dep.run_request_rows(_conv([(9, "aa", 40, 1590738995000)]))
+        got_df = dep.run_request(
+            _req(spark, dep, [(9, "aa", 40, 1590738995000)])
+        ).collect()
+        assert sc.getLocalProperty("spark.job.description") == "caller label"
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got[0]["s"] == got_df[0]["s"] == 30 + 31 + 40
+    sc.parallelize([0], 1).count()  # one ungrouped job after the serves
+    after = last_ungrouped_job()
+    jsc.listenerBus().waitUntilEmpty(10_000)
+    ids = sorted(sc.statusTracker().getJobIdsForGroup("caller-group"))
+    assert ids == list(range(before + 1, after)), (before, ids, after)
+    # each serve runs a request-key broadcast job besides its result job
+    assert len(ids) >= 4, ids
+    store = jsc.statusStore()
+    descs = {
+        d.get() if d.isDefined() else None
+        for d in (store.job(j).description() for j in ids)
+    }
+    assert descs == {"serve dlabel"}, descs
+
+
+def test_threads_without_an_active_session_serve_their_own_rows(spark):
+    """Each serve copies the cached plan on the calling thread; a py4j
+    thread other than the engine session's creator has no active
+    session, which the copy's nodes need for their conf and context.
+    Many threads, each serving its own key, must each get their own
+    rows."""
+    import sys
+    import threading
+
+    eng = _engine(spark)
+    dep = eng.execute(f"DEPLOY dthreads {SQL}")
+    dep.run_request_rows(_conv([(0, "aa", 0, 1590738995000)]))  # compile
+    hist = {"aa": 30 + 31, "bb": 50, "cc": 0}
+    results, errors = {}, []
+
+    def call(i):
+        key = ("aa", "bb", "cc")[i % 3]
+        try:
+            for k in range(2):
+                got = dep.run_request_rows(
+                    _conv([(100 + i, key, i + k, 1590738995000 + k)])
+                )
+                results[(i, k)] = (got[0]["id"], got[0]["s"], hist[key] + i + k)
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(repr(e))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [
+            threading.Thread(target=call, args=(i,))
+            for i in range(12)  # more than the test session's 8 cores
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(results) == 2 * len(threads)
+    for (i, _), (rid, s, want) in results.items():
+        assert rid == 100 + i and s == want, (i, rid, s, want)

@@ -230,11 +230,12 @@ def test_request_serving_history_is_key_pruned(spark):
     )
     dep.run_request(reqs).collect()  # compile (r13: serves are eager)
     # the pin targets the COMPILED SERVE PLAN — run_request now returns
-    # an eager driver-local result, so inspect the plan the serve runs
-    out = dep._compiled._fresh_serve_df()
-    analyzed = out._jdf.queryExecution().analyzed().toString()
+    # an eager driver-local result, so inspect the plans the serve runs:
+    # the compile-time analyzed tree and the cached executed plan
+    cp = dep._compiled
+    analyzed = cp.plan._jdf.queryExecution().analyzed().toString()
     assert "__rq_m0" in analyzed, "history key-prune marker missing"
-    assert "BroadcastHashJoin" in _plan(out)
+    assert "BroadcastHashJoin" in cp._physical.executed.toString()
 
 
 def test_banded_lsh_join_stays_single_bucket_equijoin(spark):
@@ -297,9 +298,9 @@ def test_same_spec_union_windows_fuse_to_one_union(spark):
     got = {tuple(r) for r in dep.run_request(reqs).collect()}
     assert got == {(9, 10 + 20 + 40, 3)}, got
     # the pin targets the COMPILED SERVE PLAN (r13: run_request returns
-    # an eager driver-local result, not the serve Dataset)
-    out = dep._compiled._fresh_serve_df()
-    analyzed = out._jdf.queryExecution().analyzed().toString()
+    # an eager driver-local result, not the serve Dataset): the
+    # compile-time analyzed tree every serve runs
+    analyzed = dep._compiled.plan._jdf.queryExecution().analyzed().toString()
     import re
 
     # the decisive pin: the request-history prune marker subtree exists
